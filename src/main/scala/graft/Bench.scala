@@ -198,7 +198,11 @@ object Bench {
     * (QueryProbe/K7Probe print raw canary seconds either way).
     */
   private[graft] def refCpusMatches(refPath: String): Boolean =
-    canaryReference(refPath, "_refCpus").forall(rc =>
+    refCpusMatches(canaryReference(refPath, "_refCpus"))
+
+  /** The same test on an already-read `_refCpus` stamp. */
+  private[graft] def refCpusMatches(stamp: Option[Double]): Boolean =
+    stamp.forall(rc =>
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toIntOption.contains(rc.toInt))
 
   /** Sentinel re-run, best-of-N: run `attempt` up to `max` times, stopping
@@ -413,9 +417,10 @@ object Bench {
     // lower-core leg exists to measure scaling, and its artifact now says
     // "no comparable reference" instead of fabricating drift. An absent
     // stamp (pre-r22 reference files) keeps the old always-on behavior.
-    val cpusMatch: Boolean = refCpusMatches(refPath)
+    val refCpus: Option[Double] = refsAll.get("_refCpus").filter(_ > 0)
+    val cpusMatch: Boolean = refCpusMatches(refCpus)
     if (!cpusMatch) System.err.println(
-      s"[bench] reference was stamped at ${refsAll("_refCpus").toInt} cores " +
+      s"[bench] reference was stamped at ${refCpus.fold("?")(_.toInt.toString)} cores " +
         s"but this run uses ${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")} — " +
         "drift ratios and the contention sentinel are OFF for this run " +
         "(they would compare differently-parallel executions)")

@@ -172,14 +172,26 @@ object TopKPairAgg {
     }
   }
 
+  /** Largest `k` the dedup heap accepts. Its membership test is an O(k)
+    * scan per offered pair; the bound (10x the largest call site's k = 100)
+    * keeps that scan small next to the scoring that feeds the heap. A
+    * larger k wants `.distinct()` upstream of the plain heap instead. */
+  val MaxDedupK = 1000
+
   /** Column builder: array of the k smallest (ord, id) structs per group,
     * ascending. Both inputs must be Long; rows with a null in either are
     * ignored. `dedup = true` treats bit-identical (ord, id) pairs as one
     * candidate (equivalent to `.distinct()` upstream — without the
-    * distinct's full-stream exchange).
+    * distinct's full-stream exchange). Dedup pays an O(k) membership scan
+    * per offered pair (see [[Heap]]), so it requires `k <= MaxDedupK`;
+    * the bound is checked here, once per plan, never per offer.
     */
-  def topkPairs(ord: Column, id: Column, k: Int, dedup: Boolean = false): Column =
+  def topkPairs(ord: Column, id: Column, k: Int, dedup: Boolean = false): Column = {
+    require(!dedup || k <= MaxDedupK,
+      s"topk_pairs dedup scans the heap per offer; k = $k exceeds $MaxDedupK " +
+        "(use .distinct() upstream of the non-dedup heap instead)")
     ColumnBridge.toColumn(
       TopKPairAgg(ColumnBridge.toExpr(ord), ColumnBridge.toExpr(id), k, dedup)
         .toAggregateExpression())
+  }
 }

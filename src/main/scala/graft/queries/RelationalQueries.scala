@@ -321,6 +321,8 @@ object RelationalQueries {
         // med 1.34 / r20 two-pass 1.39 / this form 1.32 — the driver's
         // r21 k7 elevation did not reproduce (write-path ambient). Row
         // order within a shard is not part of batchSplit's contract.
+        // coalesce(1) is a fixture-shape choice (one landing file per
+        // shard), never a data-path pattern: it funnels the scan into one task.
         orders.withColumn("__par", pmod(col("o_orderkey"), lit(2)))
           .coalesce(1)
           .write.mode("overwrite").option("header", "true")

@@ -9,8 +9,19 @@ import graft.ops.Checks
   * extracts -> extract checks -> cleanses -> dimension builds -> dimension
   * checks -> dimension loads -> fact load -> post-load checks + aggregates.
   * Airflow/Livy/K8s are deployment concerns (SURVEY §3.1); the edges are
-  * the spec, and sequential execution preserves them trivially. At cluster
-  * scale each stage is its own spark-submit against shared storage.
+  * the spec. They are kept as barriers plus fan-out: the nine
+  * [[stageOrder]] stages run one after another, each a barrier that
+  * starts only when the previous one has returned, and inside a stage the
+  * independent branches (the four extracts, the four cleanses, the five
+  * dimension builds, the seven dimension loads, each gate's checks, the
+  * four aggregates) run concurrently on the one session through
+  * [[Branches]]. Its three properties keep the barrier sound: every
+  * branch's jobs carry the caller's job group, description and scheduler
+  * pool; a failing branch is rethrown only after all its siblings have
+  * returned (the first failure in declared order wins); and gate results
+  * are collected in declared order, so a gate's message does not depend
+  * on which check finished first. At cluster scale each stage is its own
+  * spark-submit against shared storage.
   */
 object Pipeline {
 
@@ -36,8 +47,11 @@ object Pipeline {
   /** Expected raw column counts (airflow/main-dw-project.py:148-167). */
   val expectedColumns = Map("lfb" -> 39, "aq" -> 6, "wb" -> 16, "weather" -> 11)
 
-  private def gate(stage: String, results: Seq[Either[Checks.Violation, Unit]]): Unit =
-    Checks.runAll(results).left.foreach { vs =>
+  /** Runs a stage's checks concurrently and throws, naming every violation
+    * in declared order, if any fails. */
+  private[warehouse] def gate(stage: String,
+                              checks: Seq[() => Either[Checks.Violation, Unit]]): Unit =
+    Checks.runAll(Branches.all(checks)).left.foreach { vs =>
       throw new IllegalStateException(
         s"pipeline gate '$stage' failed: ${vs.map(v => s"${v.check}: ${v.detail}").mkString("; ")}")
     }
@@ -54,7 +68,7 @@ object Pipeline {
     "cleanse", "dimension builds", "dimension checks", "dimension loads",
     "fact load", "post-load checks", "aggregates")
 
-  /** Catalog tables the "dimension loads" stage writes, in load order —
+  /** Catalog tables the "dimension loads" stage writes, in declared order —
     * the SINGLE source of truth shared by the stage body (which runs
     * [[dimLoaders]] and requires its keys match this list) and the
     * cross-JVM resume probe in [[run]] (which re-enters at "dimension
@@ -157,41 +171,44 @@ object Pipeline {
 
     // --- extract stage (4 parallel tasks in the reference) ---
     staged("extract") {
-      Jobs.lfbExtract(spark, inputs.lfbCsv, paths.lfbRaw)
-      Jobs.aqExtract(spark, inputs.aqCsvs, paths.aqRaw)
-      Jobs.extract(spark, inputs.weatherCsv, paths.weatherRaw, Seq("date"))
-      Jobs.extract(spark, inputs.wbCsv, paths.wbRaw, Seq("Ward", "Year"))
+      Branches.all(Seq(
+        () => Jobs.lfbExtract(spark, inputs.lfbCsv, paths.lfbRaw),
+        () => Jobs.aqExtract(spark, inputs.aqCsvs, paths.aqRaw),
+        () => Jobs.extract(spark, inputs.weatherCsv, paths.weatherRaw, Seq("date")),
+        () => Jobs.extract(spark, inputs.wbCsv, paths.wbRaw, Seq("Ward", "Year"))))
     }
 
     // --- post-extract checks (etl/checks/post-extract-check.py) ---
     staged("post-extract checks") {
       val lfbRaw = spark.read.parquet(paths.lfbRaw)
       gate("post-extract", Seq(
-      Checks.nonEmpty(lfbRaw),
-      Checks.primaryKey(lfbRaw, Seq("IncidentNumber")),
-      Checks.completeness(lfbRaw, "IncidentNumber", 1.0)) ++
+      () => Checks.nonEmpty(lfbRaw),
+      () => Checks.primaryKey(lfbRaw, Seq("IncidentNumber")),
+      () => Checks.completeness(lfbRaw, "IncidentNumber", 1.0)) ++
       (if (checkColumnCounts) Seq(
-        Checks.columnCount(lfbRaw, expectedColumns("lfb")),
-        Checks.columnCount(spark.read.parquet(paths.aqRaw), expectedColumns("aq")),
-        Checks.columnCount(spark.read.parquet(paths.wbRaw), expectedColumns("wb")),
-        Checks.columnCount(spark.read.parquet(paths.weatherRaw), expectedColumns("weather")))
+        () => Checks.columnCount(lfbRaw, expectedColumns("lfb")),
+        () => Checks.columnCount(spark.read.parquet(paths.aqRaw), expectedColumns("aq")),
+        () => Checks.columnCount(spark.read.parquet(paths.wbRaw), expectedColumns("wb")),
+        () => Checks.columnCount(spark.read.parquet(paths.weatherRaw), expectedColumns("weather")))
       else Nil)) }
 
     // --- cleanse stage ---
     staged("cleanse") {
-      Jobs.lfbCleanse(spark, paths.lfbRaw, paths.lfbClean)
-      Jobs.aqCleanse(spark, paths.aqRaw, paths.aqClean)
-      Jobs.weatherCleanse(spark, paths.weatherRaw, paths.weatherClean)
-      Jobs.wbCleanse(spark, paths.wbRaw, paths.wbClean)
+      Branches.all(Seq(
+        () => Jobs.lfbCleanse(spark, paths.lfbRaw, paths.lfbClean),
+        () => Jobs.aqCleanse(spark, paths.aqRaw, paths.aqClean),
+        () => Jobs.weatherCleanse(spark, paths.weatherRaw, paths.weatherClean),
+        () => Jobs.wbCleanse(spark, paths.wbRaw, paths.wbClean)))
     }
 
     // --- dimension builds ---
     staged("dimension builds") {
-      Jobs.wardDimension(spark, paths.lfbClean, paths.wardDim)
-      Jobs.wbDimension(spark, paths.wbClean, paths.wbDim)
-      Jobs.incidentTypeDimension(spark, paths.lfbClean, paths.incidentTypeDim)
-      Jobs.locationTypeDimension(spark, paths.lfbClean, paths.locationTypeDim)
-      Jobs.dateDimension(spark, paths.lfbClean, paths.dateDim)
+      Branches.all(Seq(
+        () => Jobs.wardDimension(spark, paths.lfbClean, paths.wardDim),
+        () => Jobs.wbDimension(spark, paths.wbClean, paths.wbDim),
+        () => Jobs.incidentTypeDimension(spark, paths.lfbClean, paths.incidentTypeDim),
+        () => Jobs.locationTypeDimension(spark, paths.lfbClean, paths.locationTypeDim),
+        () => Jobs.dateDimension(spark, paths.lfbClean, paths.dateDim)))
     }
 
     // --- dimension checks (etl/checks/*-dimension-check.py) ---
@@ -201,20 +218,20 @@ object Pipeline {
       val itDim = spark.read.parquet(paths.incidentTypeDim)
       val ltDim = spark.read.parquet(paths.locationTypeDim)
       gate("dimension-checks", Seq(
-      Checks.nonEmpty(dateDim),
-      Checks.schemaEquals(dateDim, Model.dateDimSchema),
-      Checks.primaryKey(dateDim, Seq("Date")),
-      Checks.cardinalityAtMost(dateDim, "Month", 12),
-      Checks.cardinalityAtMost(dateDim, "DayOfWeek", 7),
-      Checks.inRange(dateDim, "Day", 1, 31),
-      Checks.inRange(dateDim, "Quarter", 1, 4),
-      Checks.nonEmpty(wardDim),
-      Checks.primaryKey(wardDim, Seq("WardCode")),
-      Checks.primaryKey(wardDim, Seq("WardID")),
-      Checks.nonEmpty(itDim),
-      Checks.primaryKey(itDim, Seq("IncidentTypeKey")),
-      Checks.nonEmpty(ltDim),
-      Checks.primaryKey(ltDim, Seq("LocationTypeKey")))) }
+      () => Checks.nonEmpty(dateDim),
+      () => Checks.schemaEquals(dateDim, Model.dateDimSchema),
+      () => Checks.primaryKey(dateDim, Seq("Date")),
+      () => Checks.cardinalityAtMost(dateDim, "Month", 12),
+      () => Checks.cardinalityAtMost(dateDim, "DayOfWeek", 7),
+      () => Checks.inRange(dateDim, "Day", 1, 31),
+      () => Checks.inRange(dateDim, "Quarter", 1, 4),
+      () => Checks.nonEmpty(wardDim),
+      () => Checks.primaryKey(wardDim, Seq("WardCode")),
+      () => Checks.primaryKey(wardDim, Seq("WardID")),
+      () => Checks.nonEmpty(itDim),
+      () => Checks.primaryKey(itDim, Seq("IncidentTypeKey")),
+      () => Checks.nonEmpty(ltDim),
+      () => Checks.primaryKey(ltDim, Seq("LocationTypeKey")))) }
 
     // --- dimension loads (etl/load/load_*_dim.py) ---
     staged("dimension loads") {
@@ -222,7 +239,7 @@ object Pipeline {
       require(loaders.map(_._1) == dimTables,
         s"dimLoaders keys ${loaders.map(_._1)} out of sync with " +
           s"Pipeline.dimTables $dimTables — the resume probe depends on them matching")
-      loaders.foreach { case (_, load) => load() }
+      Branches.all(loaders.map(_._2))
     }
 
     // --- fact load ---
@@ -238,11 +255,11 @@ object Pipeline {
     staged("post-load checks") {
       val fact = spark.table(factTable)
       gate("post-load", Seq(
-      Checks.nonEmpty(fact),
-      Checks.schemaEquals(
+      () => Checks.nonEmpty(fact),
+      () => Checks.schemaEquals(
         fact.select(Model.factSchema.fieldNames.map(col).toSeq: _*), Model.factSchema)) ++
       factRefGates.map { case (fk, dimTable, _, pk) =>
-        Checks.referentialIntegrity(fact, fk, spark.table(dimTable), pk)
+        () => Checks.referentialIntegrity(fact, fk, spark.table(dimTable), pk)
       }) }
 
     staged("aggregates") { Aggregates.run(spark, factTable, analyticsSchema) }

@@ -111,4 +111,14 @@ class TopKPairAggSpec extends SparkSpec {
     assert(plan.contains("partial_topk_pairs"), plan)
     assert(!plan.contains("Window"), plan)
   }
+
+  test("topk_pairs dedup refuses k past MaxDedupK when the column is built") {
+    val k = TopKPairAgg.MaxDedupK
+    TopKPairAgg.topkPairs(col("ord"), col("id"), k, dedup = true)
+    intercept[IllegalArgumentException] {
+      TopKPairAgg.topkPairs(col("ord"), col("id"), k + 1, dedup = true)
+    }
+    // the plain heap has no membership scan, so no bound
+    TopKPairAgg.topkPairs(col("ord"), col("id"), k + 1)
+  }
 }

@@ -653,4 +653,66 @@ class PipelineSpec extends SparkSpec {
     assert(all.count() == 6)
     assert(all.select("IncidentNumber").distinct().count() == 6)
   }
+
+  test("branch fan-out: a failure surfaces after slower siblings; first declared failure wins") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Branches.all(Seq(
+        () => { Thread.sleep(200); throw new IllegalStateException("declared first") },
+        () => throw new IllegalStateException("declared second, fails first"),
+        () => { Thread.sleep(600); slowDone.set(true) }))
+    }
+    assert(e.getMessage == "declared first")
+    assert(slowDone.get, "rethrown before the slowest sibling returned")
+    assert(Branches.all(Seq(() => { Thread.sleep(200); 1 }, () => 2)) == Seq(1, 2))
+  }
+
+  test("every job a Pipeline.run branch starts carries the caller's job group and pool") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    ranOnce
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String): String = Option(e.properties).map(_.getProperty(k)).orNull
+        seen.add(prop("spark.jobGroup.id") -> prop("spark.scheduler.pool"))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pipeline-spec", "fan-out tags")
+      sc.setLocalProperty("spark.scheduler.pool", "pipeline-spec-pool")
+      try Pipeline.run(spark, inputs, paths)
+      finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("spark.scheduler.pool", null)
+      }
+      // The bus delivers events in order: once the marker job's start has
+      // arrived, so has every job of the run.
+      sc.setJobGroup("pipeline-spec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._1 == "pipeline-spec-marker") &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val jobs = seen.asScala.toSeq
+    assert(jobs.exists(_._1 == "pipeline-spec-marker"), "marker job never seen")
+    val run = jobs.takeWhile(_._1 != "pipeline-spec-marker")
+    assert(run.size > 50, s"only ${run.size} jobs seen")
+    assert(run.forall(_ == ("pipeline-spec" -> "pipeline-spec-pool")),
+      s"untagged jobs: ${run.filterNot(_ == ("pipeline-spec" -> "pipeline-spec-pool")).distinct}")
+  }
+
+  test("a gate names its violations in declared order, not completion order") {
+    val empty = spark.range(0).toDF()
+    val e = intercept[IllegalStateException] {
+      Pipeline.gate("spec", Seq(
+        () => { Thread.sleep(300); graft.ops.Checks.nonEmpty(empty) },
+        () => graft.ops.Checks.primaryKey(empty, Seq("id")),
+        () => graft.ops.Checks.columnCount(empty, 2)))
+    }
+    assert(e.getMessage == "pipeline gate 'spec' failed: " +
+      "nonEmpty: expected >0 rows, got 0; columnCount: expected 2 columns, got 1: id")
+  }
 }
